@@ -17,7 +17,9 @@ import graft.operators.GraphBuilder
   * `--upsert` merges node tables into existing staging (first-seen wins,
   * new ids append — [[GraphBuilder.upsertStagedNodes]]) instead of
   * overwriting, for scheduled incremental refreshes; relationship tables
-  * are always rebuilt (edges are derived data).
+  * are always rebuilt (edges are derived data). The CSV export and the
+  * stats report then cover the merged staging, earlier batches included:
+  * `neo4j-admin import` builds its database from scratch.
   */
 object BuildGraphDb {
 
@@ -53,16 +55,8 @@ object BuildGraphDb {
     val graph = GraphBuilder.build(spark, cfg, asciiFold = args.asciiFold)
     val idKeys = cfg.nodes.map(n =>
       n.label -> n.idKeyLabel.getOrElse(n.sources.head.idKey)).toMap
-    if (args.upsert) {
-      graph.nodes.foreach { case (label, df) =>
-        GraphBuilder.upsertStagedNodes(spark, args.outDir, cfg.database,
-          label, df, idKeys(label))
-      }
-      graph.relationships.foreach { case (label, df) =>
-        GraphBuilder.replaceStagedTable(spark,
-          s"${args.outDir}/${cfg.database.outputStem}/relationships/$label", df)
-      }
-    } else graph.writeStaging(args.outDir)
+    if (args.upsert) graph.upsertStaging(args.outDir, idKeys)
+    else graph.writeStaging(args.outDir)
     if (args.csv) graph.exportNeo4jCsv(args.outDir, idKeys)
     println(s"[build-graph-db] staged ${graph.nodes.size} node tables and " +
       s"${graph.relationships.size} relationship tables under " +

@@ -8,15 +8,55 @@ import graft.sources.SourceReader
 
 /** The built property graph: one DataFrame per node label and per
   * relationship type — the Spark equivalent of the reference's HDF5 groups
-  * `/nodes` and `/relationships` (graph_db_builder.py:152-155). */
+  * `/nodes` and `/relationships`. The reference stages every table once and
+  * then serializes the staged graph (graph_db_builder.py:152-155 staging,
+  * then serialize). Here `nodes` and `relationships` are lazy build plans,
+  * and Spark re-runs a plan for every action, so the graph binds itself to
+  * its staged store:
+  *
+  *  - Unbound (a fresh build, or any `copy`): [[exportNeo4jCsv]] and
+  *    [[stats]] run the build plans.
+  *  - Bound: once [[writeStaging]] or [[upsertStaging]] has written EVERY
+  *    table, the graph records that staged base dir, and [[exportNeo4jCsv]]
+  *    and [[stats]] read each table from its staged parquet dir. A write
+  *    that fails partway leaves the graph unbound.
+  *
+  * The binding is one-way, like `Dataset.persist`: it comes only from a
+  * write this graph object made, never from what a directory happens to
+  * hold, and nothing unbinds it except a later staging write. The caller
+  * keeps the staged dirs unchanged while the graph is in use. The
+  * `nodes`/`relationships` fields always stay the build plans. */
 final case class PropertyGraph(
     meta: DatabaseMeta,
     nodes: Map[String, DataFrame],
     relationships: Map[String, DataFrame]) {
 
+  /** This graph's staged store under `base`, read lazily on first use (a
+    * caller that never exports pays no listing). With `exactSchema` the
+    * staged tables were written from the build frames, so each read takes
+    * its frame's schema and Spark runs no schema-inference job; otherwise
+    * (merged upserts) the schema is read from the files. */
+  private final class Staged(base: String, exactSchema: Boolean) {
+    private def read(dir: String, df: DataFrame): DataFrame = {
+      val reader = df.sparkSession.read
+      (if (exactSchema) reader.schema(df.schema) else reader)
+        .parquet(s"$base/$dir")
+    }
+    lazy val nodeTables: Map[String, DataFrame] = nodes.map {
+      case (label, df) => label -> read(s"nodes/$label", df)
+    }
+    lazy val relTables: Map[String, DataFrame] = relationships.map {
+      case (label, df) => label -> read(s"relationships/$label", df)
+    }
+  }
+
+  @volatile private var staged: Option[Staged] = None
+
   /** S5-equivalent staging store: parquet dirs `nodes/<Label>/`,
-    * `relationships/<TYPE>/` under `outDir/{name}-{version}`. */
+    * `relationships/<TYPE>/` under `outDir/{name}-{version}`. Binds the
+    * graph to them once every table is written. */
   def writeStaging(outDir: String): Unit = {
+    staged = None
     val base = s"$outDir/${meta.outputStem}"
     nodes.foreach { case (label, df) =>
       df.write.mode("overwrite").parquet(s"$base/nodes/$label")
@@ -24,7 +64,33 @@ final case class PropertyGraph(
     relationships.foreach { case (label, df) =>
       df.write.mode("overwrite").parquet(s"$base/relationships/$label")
     }
+    staged = Some(new Staged(base, exactSchema = true))
   }
+
+  /** Incremental twin of [[writeStaging]]: merges each node table into the
+    * existing staging ([[GraphBuilder.upsertStagedNodes]], keyed by
+    * `idKeys(label)`) and replaces each relationship table
+    * ([[GraphBuilder.replaceStagedTable]]; edges are derived data). Binds
+    * the graph to the merged store, whose node tables hold earlier batches'
+    * rows and may carry columns this build lacks. */
+  def upsertStaging(outDir: String, idKeys: Map[String, String]): Unit = {
+    staged = None
+    val base = s"$outDir/${meta.outputStem}"
+    nodes.foreach { case (label, df) =>
+      GraphBuilder.upsertStagedNodes(df.sparkSession, outDir, meta, label,
+        df, idKeys(label))
+    }
+    relationships.foreach { case (label, df) =>
+      GraphBuilder.replaceStagedTable(df.sparkSession,
+        s"$base/relationships/$label", df)
+    }
+    staged = Some(new Staged(base, exactSchema = false))
+  }
+
+  /** The tables export and stats serialize: the staged store once bound,
+    * else the build plans. */
+  private def serialized: (Map[String, DataFrame], Map[String, DataFrame]) =
+    staged.fold((nodes, relationships))(s => (s.nodeTables, s.relTables))
 
   /** S7/S8: CSV export in Neo4j bulk-import layout (`neo4j-admin import`):
     * node files get `<idKey>:ID(<Label>)` + `:LABEL`; relationship files get
@@ -33,7 +99,8 @@ final case class PropertyGraph(
     * bin/build-graph-db:16). */
   def exportNeo4jCsv(outDir: String, idKeys: Map[String, String]): Unit = {
     val base = s"$outDir/${meta.outputStem}-csv"
-    nodes.foreach { case (label, df0) =>
+    val (nodeTables, relTables) = serialized
+    nodeTables.foreach { case (label, df0) =>
       val df = PropertyGraph.neo4jReady(df0)
       // uri_key contract (reference graph_db_builder.py:468-470: the uri_key
       // column "will be used to determine the URI of the node in the output
@@ -50,7 +117,7 @@ final case class PropertyGraph(
       }
       PropertyGraph.writeCsv(renamed, s"$base/nodes_$label")
     }
-    relationships.foreach { case (label, df) =>
+    relTables.foreach { case (label, df) =>
       val ready = PropertyGraph.neo4jReady(df)
         .withColumnRenamed(RelPipeline.StartId, ":START_ID")
         .withColumnRenamed(RelPipeline.EndId, ":END_ID")
@@ -62,11 +129,12 @@ final case class PropertyGraph(
   /** A4: graph statistics — node/edge count per label, one deterministic
     * report DataFrame. */
   def stats(spark: SparkSession): DataFrame = {
+    val (nodeTables, relTables) = serialized
     val parts =
-      nodes.toSeq.sortBy(_._1).map { case (label, df) =>
+      nodeTables.toSeq.sortBy(_._1).map { case (label, df) =>
         df.select(lit("node").as("kind"), lit(label).as("label"),
           count(lit(1)).as("n"))
-      } ++ relationships.toSeq.sortBy(_._1).map { case (label, df) =>
+      } ++ relTables.toSeq.sortBy(_._1).map { case (label, df) =>
         df.select(lit("rel").as("kind"), lit(label).as("label"),
           count(lit(1)).as("n"))
       }
@@ -135,6 +203,14 @@ object GraphBuilder {
         else col(f.name)
       }.toIndexedSeq: _*)
 
+    // One scan per (source, table) within this call: node sources and FK /
+    // join-table reads of one table share a DataFrame, so its schema is
+    // resolved once (each parquet read runs a schema-inference job).
+    val scans = scala.collection.mutable.Map.empty[(String, String), DataFrame]
+    def scan(source: String, table: String): DataFrame =
+      scans.getOrElseUpdate((source, table),
+        SourceReader.readTable(spark, cfg.sources(source), table))
+
     // --- nodes: scan each source table, normalize the id column name to
     // the label's canonical id — `id_key_label` if declared (reference
     // config.yml:16-18: Gene's per-source `entrez` id surfaces as
@@ -147,8 +223,7 @@ object GraphBuilder {
     val nodes: Map[String, DataFrame] = cfg.nodes.map { n =>
       val canonicalId = nodeIdKey(n.label)
       val srcDfs = n.sources.map { s =>
-        val raw = normalized(
-          SourceReader.readTable(spark, cfg.sources(s.source), s.table))
+        val raw = normalized(scan(s.source, s.table))
         // Each source names its id key independently (config.yml:20 vs :27);
         // align them onto the label's canonical id before the union.
         val aligned =
@@ -166,11 +241,10 @@ object GraphBuilder {
     // --- relationships: per declared mode (RelPipeline).
     val rels: Map[String, DataFrame] = cfg.relationships.map { r =>
       val parts = r.sources.map { rs =>
-        val srcConf = cfg.sources(rs.source)
         rs.mode match {
           case fk: ForeignKeyMode =>
-            val startDf = SourceReader.readTable(spark, srcConf, fk.startTable)
-            val endDf = SourceReader.readTable(spark, srcConf, fk.endTable)
+            val startDf = scan(rs.source, fk.startTable)
+            val endDf = scan(rs.source, fk.endTable)
             // J3: resolve BOTH endpoints to the owning node's id_key — the
             // join key may be a foreign key (CUSTOMER_IN_NATION joins on
             // c_nationkey; the Customer node's id is c_custkey), so emitting
@@ -202,7 +276,7 @@ object GraphBuilder {
               endDf, fk.endKey, endId,
               startProps = fk.startProps, endProps = fk.endProps)
           case jt: JoinTableMode =>
-            val edgeDf = SourceReader.readTable(spark, srcConf, jt.table)
+            val edgeDf = scan(rs.source, jt.table)
             // Endpoint inference (reference config.yml:48-54 names no nodes
             // for join_table mode — from_field/to_field implicitly match
             // node id_keys, e.g. aop_gene.AOP_id → AOP, .entrez → Gene).

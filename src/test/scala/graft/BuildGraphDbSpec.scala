@@ -53,10 +53,19 @@ class BuildGraphDbSpec extends SparkSpec {
          |    sources:
          |      P: { table: nation, id_key: n_nationkey }
          |""".stripMargin)
-    BuildGraphDb.run(Args(cfgPath, s"$tmp/out", upsert = true), spark)
+    val printed = new java.io.ByteArrayOutputStream
+    Console.withOut(printed) {
+      BuildGraphDb.run(Args(cfgPath, s"$tmp/out", csv = true, upsert = true),
+        spark)
+    }
     // 25 seeded (shifted) ids + 25 fresh ids, all retained
     val staged = spark.read.parquet(s"$tmp/out/NGraph-1/nodes/Nation")
     assert(staged.count() == 50)
+    // the CSV export and the stats report cover the merged staging
+    assert(spark.read.option("header", "true")
+      .csv(s"$tmp/out/NGraph-1-csv/nodes_Nation").count() == 50)
+    assert("""\|node\s*\|Nation\s*\|50\s*\|""".r
+      .findFirstIn(printed.toString).isDefined, printed.toString)
     // without --upsert the same build clobbers back down to 25
     BuildGraphDb.run(Args(cfgPath, s"$tmp/out"), spark)
     assert(spark.read.parquet(s"$tmp/out/NGraph-1/nodes/Nation").count() == 25)

@@ -1,6 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 
 import graft.config._
 import graft.operators.GraphBuilder
@@ -278,6 +285,132 @@ class GraphBuilderSpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("vec_id") === 7)
       .select("embedding").head().getSeq[Float](0)
     assert(orig == merged)
+  }
+
+  test("self-referencing foreign_key: one shared scan, aliased self-join") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-selfjoin").toString
+    Seq((1L, "ada", None), (2L, "bo", Some(1L)), (3L, "cy", Some(1L)),
+      (4L, "di", Some(2L)), (5L, "ed", Some(99L)))
+      .toDF("emp_id", "name", "manager_id")
+      .write.parquet(s"$tmp/employee.parquet")
+    val yaml =
+      s"""Database: { name: Org, version: "1" }
+         |Sources:
+         |  P: { source type: parquet, path: $tmp }
+         |Nodes:
+         |  Employee:
+         |    sources:
+         |      P: { table: employee, id_key: emp_id }
+         |Relationships:
+         |  REPORTS_TO:
+         |    sources:
+         |      P:
+         |        type: foreign_key
+         |        start: { node: Employee, table: employee, key: manager_id }
+         |        end: { node: Employee, table: employee, key: emp_id }
+         |""".stripMargin
+    val edges = GraphBuilder.build(spark, GraphConfig.fromYaml(yaml))
+      .relationships("REPORTS_TO")
+    // both join sides scan the one DataFrame the build read
+    val scans = edges.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRelation => l.relation }
+    assert(scans.size == 2 && (scans(0) eq scans(1)))
+    // employee 5's manager 99 does not exist; employee 1 has none
+    assert(edges.count() == 3)
+    assert(edges.as[(Long, Long)].collect().toSet ==
+      Set((2L, 1L), (3L, 1L), (4L, 2L)))
+  }
+
+  private lazy val idKeys = cfg.nodes.map(n =>
+    n.label -> n.idKeyLabel.getOrElse(n.sources.head.idKey)).toMap
+
+  /** A graph staged under a fresh dir, and an unstaged build of the same
+    * spec: the reference for what export and stats must produce. */
+  private lazy val (staged, stagedDir, unstaged) = {
+    val dir = Files.createTempDirectory("graft-staged").toString
+    val g = GraphBuilder.build(spark, cfg, asciiFold = true)
+    g.writeStaging(dir)
+    (g, dir, GraphBuilder.build(spark, cfg, asciiFold = true))
+  }
+
+  /** Rows of every CSV file set under an export dir, by file set name. */
+  private def csvRows(dir: String): Map[String, (Seq[String], Seq[String])] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).map { d =>
+      val df = spark.read.option("header", "true").option("escape", "\"")
+        .option("multiLine", "true").csv(d.getPath)
+      d.getName -> (df.columns.toSeq,
+        df.collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted)
+    }.toMap
+
+  test("after writeStaging, CSV export and stats equal the unstaged graph's") {
+    val a = Files.createTempDirectory("graft-csv-staged").toString
+    val b = Files.createTempDirectory("graft-csv-plan").toString
+    staged.exportNeo4jCsv(a, idKeys)
+    unstaged.exportNeo4jCsv(b, idKeys)
+    val (fromStage, fromPlan) = (csvRows(s"$a/TpchGraph-0.1-csv"),
+      csvRows(s"$b/TpchGraph-0.1-csv"))
+    assert(fromPlan.size == 7)
+    assert(fromStage.keySet == fromPlan.keySet)
+    fromPlan.foreach { case (set, rows) => assert(fromStage(set) == rows, set) }
+    assert(staged.stats(spark).collect().toSeq ==
+      unstaged.stats(spark).collect().toSeq)
+  }
+
+  test("after writeStaging, stats scans only the staged parquet dirs") {
+    def roots(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().map {
+        case l: LogicalRelation => l.relation match {
+          case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+          case other => Seq(other.toString)
+        }
+        case other => Seq(other.toString)
+      }
+    val stagedRoots = roots(staged.stats(spark))
+    assert(stagedRoots.size == 7)
+    val stem = new java.io.File(s"$stagedDir/TpchGraph-0.1").toURI.toString
+    assert(stagedRoots.flatten.forall(_.startsWith(stem)), stagedRoots)
+    assert(!roots(unstaged.stats(spark)).flatten.exists(_.startsWith(stem)))
+    // a copy is a new graph: unbound, back on the build plans
+    assert(!roots(staged.copy().stats(spark)).flatten.exists(_.startsWith(stem)))
+  }
+
+  /** Shuffle map stages the jobs of `body` run (stages tagged by a local
+    * property, told apart by their task type). A marker job afterwards
+    * drains the listener bus: a listener receives events in the order they
+    * were posted. */
+  private def shuffleStages(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (probe, marker) = ("graft.spec.probe", "graft.spec.marker")
+    val probed, shuffleMap = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty(probe) != null)
+          probed.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask" && probed.contains(e.stageId))
+          shuffleMap.add(e.stageId)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(probe, "1")
+      try body finally sc.setLocalProperty(probe, null)
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    shuffleMap.size
+  }
+
+  test("after writeStaging, CSV export runs no shuffle map stage") {
+    val out = Files.createTempDirectory("graft-csv-noshuffle").toString
+    assert(shuffleStages(staged.exportNeo4jCsv(out, idKeys)) == 0)
+    // the unstaged export re-runs merge-by-id and the edge joins
+    assert(shuffleStages(unstaged.exportNeo4jCsv(out, idKeys)) > 0)
   }
 
   test("entry smoke: flagship stats >0 rows") {
